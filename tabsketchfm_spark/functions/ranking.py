@@ -20,6 +20,12 @@ window whenever the ordering is a total order:
   eagerly run its whole upstream). No partition ever holds more than
   its range share; ties across partitions are safe because equal keys
   range-partition together.
+
+Which to use: a result bounded by the candidates named in the call
+(a search over listed columns or tables yields at most one row each)
+uses ``ranked_topk`` with ``k`` set to that count — no persist, no
+sampling job, no offsets pass. An unbounded relation (every column
+pair of a lake, an arbitrary candidate frame) uses ``global_rank``.
 """
 
 from __future__ import annotations

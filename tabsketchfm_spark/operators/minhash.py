@@ -15,7 +15,7 @@ relations (broadcast-able at any scale).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from tabsketchfm_spark.functions.hashing import (
     MINHASH_PRIME,
@@ -175,51 +175,92 @@ def oph_signatures_oracle_sql(
     return "\nUNION ALL\n".join(parts)
 
 
-def oph_jaccard_estimate(
+def oph_pair_scores(
     query_sigs: DataFrame, candidate_sigs: DataFrame, num_buckets: int = NUM_PERM
 ) -> DataFrame:
-    """Jaccard estimate from OPH signatures: agreeing buckets over
-    buckets occupied by EITHER side — the empty-bucket-aware estimator
-    (identical sets score exactly 1.0 regardless of fill rate). Same
-    ranking contract as minhash_jaccard_estimate."""
-    # consumed twice (bucket counts + slot comparison) — persist, or the
-    # full upstream sketch pass re-executes per consumer
-    candidate_sigs = candidate_sigs.persist()
-    q = query_sigs.select(F.col("bucket"), F.col("sig").alias("qsig"))
-    qn = q.agg(F.count(F.lit(1)).alias("nq"))
-    common = (
+    """Score every (query column, candidate column) pair of two OPH
+    signature frames in ONE pass. Output: (q_col, nq, cand_table,
+    cand_col, nc, ncommon, matches) — occupied buckets of the query
+    column (nq) and of the candidate (nc), buckets both occupy
+    (ncommon) and buckets whose sigs agree (matches).
+
+    The query sketch (≤ num_buckets rows per query column) is densified
+    to exactly one (q_col, nq, bucket, qsig) row per bucket — qsig NULL
+    where the query column left the bucket empty — from ONE aggregate,
+    so the query table is scanned once. Every candidate sketch row then
+    joins exactly one broadcast row per query column, and a single
+    groupBy yields all three candidate-side counts — the candidate
+    sketch is read once, so nothing needs persisting. Every pair whose
+    two columns both have a sketch gets a row, shared buckets or not; a
+    column with no non-NULL value has no sketch and so no row."""
+    q = (
+        query_sigs.groupBy(F.col("column_name").alias("q_col"))
+        .agg(
+            F.count(F.lit(1)).alias("nq"),
+            F.map_from_entries(F.collect_list(F.struct("bucket", "sig"))).alias("qm"),
+        )
+        .select(
+            "q_col",
+            "nq",
+            "qm",
+            F.explode(F.sequence(F.lit(0), F.lit(num_buckets - 1))).alias("bucket"),
+        )
+        .select(
+            "q_col", "nq", "bucket", F.try_element_at("qm", F.col("bucket")).alias("qsig")
+        )
+    )
+    return (
         candidate_sigs.join(F.broadcast(q), "bucket")
         .groupBy(
+            "q_col",
+            "nq",
             F.col("table_name").alias("cand_table"),
-            F.col("column_name").alias("cand_column"),
+            F.col("column_name").alias("cand_col"),
         )
         .agg(
-            F.count(F.lit(1)).alias("ncommon"),
+            F.count(F.lit(1)).alias("nc"),
+            F.count("qsig").alias("ncommon"),
             F.count(F.when(F.col("sig") == F.col("qsig"), 1)).alias("matches"),
         )
     )
-    ccnt = candidate_sigs.groupBy(
-        F.col("table_name").alias("cand_table"),
-        F.col("column_name").alias("cand_column"),
-    ).agg(F.count(F.lit(1)).alias("nc"))
-    est = (
-        ccnt.join(common, ["cand_table", "cand_column"], "left")
-        .crossJoin(F.broadcast(qn))
-        .select(
-            "cand_table",
-            "cand_column",
-            (
-                F.coalesce(F.col("matches"), F.lit(0))
-                / (
-                    F.col("nc") + F.col("nq") - F.coalesce(F.col("ncommon"), F.lit(0))
-                ).cast("double")
-            ).alias("est_jaccard"),
-        )
+
+
+def _oph_jaccard() -> Column:
+    """Empty-bucket-aware Jaccard estimate of an ``oph_pair_scores`` row:
+    agreeing buckets over buckets occupied by EITHER side (identical
+    sets score exactly 1.0 regardless of fill rate)."""
+    return F.col("matches") / (
+        F.col("nc") + F.col("nq") - F.col("ncommon")
+    ).cast("double")
+
+
+def _join_order() -> list[Column]:
+    return [F.desc("est_jaccard"), F.asc("cand_table"), F.asc("cand_column")]
+
+
+def _oph_join_estimates(
+    query_sigs: DataFrame, candidate_sigs: DataFrame, num_buckets: int
+) -> DataFrame:
+    """(cand_table, cand_column, est_jaccard) for ONE query column."""
+    return oph_pair_scores(query_sigs, candidate_sigs, num_buckets).select(
+        "cand_table",
+        F.col("cand_col").alias("cand_column"),
+        _oph_jaccard().alias("est_jaccard"),
     )
+
+
+def oph_jaccard_estimate(
+    query_sigs: DataFrame, candidate_sigs: DataFrame, num_buckets: int = NUM_PERM
+) -> DataFrame:
+    """Jaccard estimate from OPH signatures of ONE query column against
+    an arbitrary candidate frame, every candidate ranked (estimate desc,
+    then name). Same ranking contract as minhash_jaccard_estimate. The
+    candidate frame is unbounded here, so the rank is ``global_rank``;
+    ``joinability_search_oph`` bounds it by the columns it names."""
     from tabsketchfm_spark.functions.ranking import global_rank
 
     return global_rank(
-        est, [F.desc("est_jaccard"), F.asc("cand_table"), F.asc("cand_column")]
+        _oph_join_estimates(query_sigs, candidate_sigs, num_buckets), _join_order()
     )
 
 
@@ -276,7 +317,11 @@ def joinability_search_oph(
     num_buckets: int = NUM_PERM,
 ) -> DataFrame:
     """Flagship at scale: OPH sketches instead of k-perm (one hash per
-    value; ~10× faster on wide scans, same ranking contract)."""
+    value; ~10× faster on wide scans, same ranking contract). One
+    aggregate sketches every candidate, one pass scores them, and the
+    result — at most one row per listed candidate column — is ranked
+    by a top-k bounded by that count."""
+    from tabsketchfm_spark.functions.ranking import ranked_topk
     from tabsketchfm_spark.sources.tables import load_table
 
     qt, qc = query
@@ -285,7 +330,11 @@ def joinability_search_oph(
         [(load_table(spark, sf_dir, t), t, cols) for t, cols in candidates],
         num_buckets,
     )
-    return oph_jaccard_estimate(qsigs, cand_sigs, num_buckets)
+    return ranked_topk(
+        _oph_join_estimates(qsigs, cand_sigs, num_buckets),
+        _join_order(),
+        sum(len(cols) for _, cols in candidates),
+    )
 
 
 def joinability_oph_oracle_sql(
@@ -296,17 +345,18 @@ def joinability_oph_oracle_sql(
     qt, qc = query
     h = h32_sql("v", "duckdb")
     cand_parts = []
-    for t, cols in candidates:
-        for c in cols:
-            vals = (
-                f"SELECT nullif(CAST({c} AS VARCHAR), '') AS v FROM {t} "
-                f"WHERE nullif(CAST({c} AS VARCHAR), '') IS NOT NULL"
-            )
-            cand_parts.append(
-                f"""SELECT '{t}' AS cand_table, '{c}' AS cand_column,
-                    h % {num_buckets} AS bucket, min(h) AS sig
-                FROM (SELECT {h} AS h FROM ({vals}) vals) hs GROUP BY 1, 2, 3"""
-            )
+    # a column listed twice is sketched once, as the Spark side's
+    # (table, column, bucket) aggregate does
+    for t, c in dict.fromkeys((t, c) for t, cols in candidates for c in cols):
+        vals = (
+            f"SELECT nullif(CAST({c} AS VARCHAR), '') AS v FROM {t} "
+            f"WHERE nullif(CAST({c} AS VARCHAR), '') IS NOT NULL"
+        )
+        cand_parts.append(
+            f"""SELECT '{t}' AS cand_table, '{c}' AS cand_column,
+                h % {num_buckets} AS bucket, min(h) AS sig
+            FROM (SELECT {h} AS h FROM ({vals}) vals) hs GROUP BY 1, 2, 3"""
+        )
     qvals = (
         f"SELECT nullif(CAST({qc} AS VARCHAR), '') AS v FROM {qt} "
         f"WHERE nullif(CAST({qc} AS VARCHAR), '') IS NOT NULL"
@@ -480,59 +530,18 @@ def unionability_search(
     """
     from pyspark.sql import Window
 
+    from tabsketchfm_spark.functions.ranking import ranked_topk
     from tabsketchfm_spark.sources.tables import load_table
 
     qsigs = oph_signatures(
         load_table(spark, sf_dir, query_table), query_table, query_columns, num_buckets
-    ).persist()
-    csigs = None
-    for t, cols in candidates.items():
-        s = oph_signatures(load_table(spark, sf_dir, t), t, cols, num_buckets)
-        csigs = s if csigs is None else csigs.unionByName(s)
-    csigs = csigs.persist()
-
-    qcnt = qsigs.groupBy(F.col("column_name").alias("q_col")).agg(
-        F.count(F.lit(1)).alias("nq")
     )
-    ccnt = csigs.groupBy(
-        F.col("table_name").alias("cand_table"),
-        F.col("column_name").alias("cand_col"),
-    ).agg(F.count(F.lit(1)).alias("nc"))
-    common = (
-        csigs.join(
-            F.broadcast(
-                qsigs.select(
-                    F.col("column_name").alias("q_col"),
-                    "bucket",
-                    F.col("sig").alias("qsig"),
-                )
-            ),
-            "bucket",
-        )
-        .groupBy(
-            F.col("q_col"),
-            F.col("table_name").alias("cand_table"),
-            F.col("column_name").alias("cand_col"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("ncommon"),
-            F.count(F.when(F.col("sig") == F.col("qsig"), 1)).alias("matches"),
-        )
+    csigs = oph_signatures_multi(
+        [(load_table(spark, sf_dir, t), t, cols) for t, cols in candidates.items()],
+        num_buckets,
     )
-    est = (
-        ccnt.crossJoin(F.broadcast(qcnt))
-        .join(common, ["q_col", "cand_table", "cand_col"], "left")
-        .select(
-            "q_col",
-            "cand_table",
-            "cand_col",
-            (
-                F.coalesce(F.col("matches"), F.lit(0))
-                / (
-                    F.col("nc") + F.col("nq") - F.coalesce(F.col("ncommon"), F.lit(0))
-                ).cast("double")
-            ).alias("est"),
-        )
+    est = oph_pair_scores(qsigs, csigs, num_buckets).select(
+        "q_col", "cand_table", "cand_col", _oph_jaccard().alias("est")
     )
     wk = Window.partitionBy("q_col").orderBy(
         F.desc("est"), F.asc("cand_table"), F.asc("cand_col")
@@ -548,11 +557,10 @@ def unionability_search(
         F.count(F.lit(1)).alias("matched_cols"),
         F.round(F.sum(F.lit(1.0) - F.col("est")), 6).alias("score_sum"),
     )
-    from tabsketchfm_spark.functions.ranking import global_rank
-
-    return global_rank(
-        votes.select("cand_table", "matched_cols", "score_sum"),
+    return ranked_topk(
+        votes,
         [F.desc("matched_cols"), F.asc("score_sum"), F.asc("cand_table")],
+        len(candidates),
     )
 
 
@@ -575,14 +583,16 @@ def unionability_oracle_sql(
             f"FROM (SELECT {h} AS h FROM ({vals}) vals) hs GROUP BY 1, 2, 3"
         )
 
+    # a column listed twice is sketched once, as the Spark side's
+    # (table, column, bucket) aggregate does
     qparts = "\nUNION ALL\n".join(
         sig_part(query_table, c, f"'{query_table}' AS t, '{c}' AS q_col")
-        for c in query_columns
+        for c in dict.fromkeys(query_columns)
     )
     cparts = "\nUNION ALL\n".join(
         sig_part(t, c, f"'{t}' AS cand_table, '{c}' AS cand_col")
         for t, cols in candidates.items()
-        for c in cols
+        for c in dict.fromkeys(cols)
     )
     return f"""
 WITH qsigs AS ({qparts}),
@@ -628,45 +638,29 @@ def subset_search(
     BASELINE.md): rank candidate tables by how CONTAINED the query
     table's columns are in theirs — containment est = agreeing buckets
     over the QUERY side's occupied buckets (asymmetric, unlike the
-    Jaccard estimate). Output: (cand_table, mean_containment, rank)."""
+    Jaccard estimate). Only column pairs sharing an occupied bucket
+    vote. Output: (cand_table, mean_containment, rank)."""
     from pyspark.sql import Window
 
+    from tabsketchfm_spark.functions.ranking import ranked_topk
     from tabsketchfm_spark.sources.tables import load_table
 
     qsigs = oph_signatures(
         load_table(spark, sf_dir, query_table), query_table, query_columns, num_buckets
-    ).persist()
-    csigs = None
-    for t, cols in candidates.items():
-        s = oph_signatures(load_table(spark, sf_dir, t), t, cols, num_buckets)
-        csigs = s if csigs is None else csigs.unionByName(s)
-
-    qcnt = qsigs.groupBy(F.col("column_name").alias("q_col")).agg(
-        F.count(F.lit(1)).alias("nq")
     )
-    matches = (
-        csigs.join(
-            F.broadcast(
-                qsigs.select(
-                    F.col("column_name").alias("q_col"),
-                    "bucket",
-                    F.col("sig").alias("qsig"),
-                )
-            ),
-            "bucket",
-        )
-        .groupBy(
+    csigs = oph_signatures_multi(
+        [(load_table(spark, sf_dir, t), t, cols) for t, cols in candidates.items()],
+        num_buckets,
+    )
+    cont = (
+        oph_pair_scores(qsigs, csigs, num_buckets)
+        .where(F.col("ncommon") > 0)
+        .select(
             "q_col",
-            F.col("table_name").alias("cand_table"),
-            F.col("column_name").alias("cand_col"),
+            "cand_table",
+            "cand_col",
+            (F.col("matches") / F.col("nq").cast("double")).alias("containment"),
         )
-        .agg(F.count(F.when(F.col("sig") == F.col("qsig"), 1)).alias("m"))
-    )
-    cont = matches.join(F.broadcast(qcnt), "q_col").select(
-        "q_col",
-        "cand_table",
-        "cand_col",
-        (F.col("m") / F.col("nq").cast("double")).alias("containment"),
     )
     wf = Window.partitionBy("q_col", "cand_table").orderBy(
         F.desc("containment"), F.asc("cand_col")
@@ -677,11 +671,10 @@ def subset_search(
             "mean_containment"
         )
     )
-    from tabsketchfm_spark.functions.ranking import global_rank
-
-    return global_rank(
-        per_table.select("cand_table", "mean_containment"),
+    return ranked_topk(
+        per_table,
         [F.desc("mean_containment"), F.asc("cand_table")],
+        len(candidates),
     )
 
 
@@ -703,14 +696,16 @@ def subset_search_oracle_sql(
             f"FROM (SELECT {h} AS h FROM ({vals}) vals) hs GROUP BY 1, 2, 3"
         )
 
+    # a column listed twice is sketched once, as the Spark side's
+    # (table, column, bucket) aggregate does
     qparts = "\nUNION ALL\n".join(
         sig_part(query_table, c, f"'{query_table}' AS t, '{c}' AS q_col")
-        for c in query_columns
+        for c in dict.fromkeys(query_columns)
     )
     cparts = "\nUNION ALL\n".join(
         sig_part(t, c, f"'{t}' AS cand_table, '{c}' AS cand_col")
         for t, cols in candidates.items()
-        for c in cols
+        for c in dict.fromkeys(cols)
     )
     return f"""
 WITH qsigs AS ({qparts}),

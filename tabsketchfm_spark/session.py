@@ -9,8 +9,28 @@ deterministic across engines (the DuckDB oracle is TZ-naive).
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import SparkSession
+
+# serializes ensure_package_on_workers' check-then-ship
+_SHIP_LOCK = threading.Lock()
+
+
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """Driver heap when $SPARK_GRAFT_DRIVER_MEM is unset: half of
+    physical memory, capped at 16g — a fixed 16g heap outgrows a small
+    host and gets the JVM OOM-killed. ``phys_bytes`` defaults to this
+    host's physical memory; if that cannot be read, 16g."""
+    cap_mb = 16 * 1024
+    if phys_bytes is None:
+        try:
+            phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        except (AttributeError, ValueError, OSError):
+            return f"{cap_mb // 1024}g"
+    half_mb = max(phys_bytes // 2 // (1024 * 1024), 512)
+    mb = min(cap_mb, half_mb)
+    return f"{mb // 1024}g" if mb % 1024 == 0 else f"{mb}m"
 
 
 def get_spark(
@@ -62,7 +82,10 @@ def get_spark(
         # python-side error-context feature; plans are unchanged.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", str(ui).lower())
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -73,23 +96,29 @@ def ensure_package_on_workers(spark: SparkSession) -> None:
     """Ship this package to Python workers via addPyFile — required
     when the SparkSession was created by an external harness whose
     environment doesn't have the repo on PYTHONPATH. Idempotent per
-    session. Operators using mapInPandas / pandas UDFs call this."""
-    sc = spark.sparkContext
-    if sc.environment.get("_tabsketchfm_pkg_shipped"):
-        return
+    session. Operators using mapInPandas / pandas UDFs call this.
+
+    Thread-safe: queries built concurrently on one session would
+    otherwise both pass the shipped check, rewrite the same zip and add
+    it twice — and a task fetching the first copy then fails with "exists
+    and does not match contents"."""
     import tempfile
     import zipfile
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    zpath = os.path.join(
-        tempfile.gettempdir(), f"tabsketchfm_spark_pkg_{os.getpid()}.zip"
-    )
-    with zipfile.ZipFile(zpath, "w") as z:
-        pkg = os.path.join(root, "tabsketchfm_spark")
-        for dirpath, _dirs, files in os.walk(pkg):
-            for f in files:
-                if f.endswith(".py"):
-                    full = os.path.join(dirpath, f)
-                    z.write(full, os.path.relpath(full, root))
-    sc.addPyFile(zpath)
-    sc.environment["_tabsketchfm_pkg_shipped"] = "1"
+    sc = spark.sparkContext
+    with _SHIP_LOCK:
+        if sc.environment.get("_tabsketchfm_pkg_shipped"):
+            return
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        zpath = os.path.join(
+            tempfile.gettempdir(), f"tabsketchfm_spark_pkg_{os.getpid()}.zip"
+        )
+        with zipfile.ZipFile(zpath, "w") as z:
+            pkg = os.path.join(root, "tabsketchfm_spark")
+            for dirpath, _dirs, files in os.walk(pkg):
+                for f in files:
+                    if f.endswith(".py"):
+                        full = os.path.join(dirpath, f)
+                        z.write(full, os.path.relpath(full, root))
+        sc.addPyFile(zpath)
+        sc.environment["_tabsketchfm_pkg_shipped"] = "1"

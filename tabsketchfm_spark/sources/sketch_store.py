@@ -79,10 +79,13 @@ def build_sketch_rows(
     table_name: str,
     aug_id: int = 0,
     num_perm: int = NUM_PERM,
+    caches: list | None = None,
 ) -> DataFrame:
     """Full sketch rows for one (table, aug): per-column stats (A1-A8)
     + exact-value MinHash + word MinHash for strings; column order /
-    col_idx follows the augmentation permutation."""
+    col_idx follows the augmentation permutation. ``caches`` receives
+    the frames the profiler persists (``profile_table``'s contract):
+    callers that materialize the rows eagerly unpersist them after."""
     from tabsketchfm_spark.operators.minhash import minhash_signatures
 
     dtypes = dict(df.dtypes)
@@ -90,7 +93,7 @@ def build_sketch_rows(
         c for c in aug_column_order(table_name, df.columns, aug_id)
         if spark_logical_type(dtypes[c]) != "other"
     ]
-    prof = profile_table(df, table_name, columns=cols)
+    prof = profile_table(df, table_name, columns=cols, caches=caches)
     mh = column_minhash_wide(df, cols, num_perm)
     str_cols = [c for c in cols if spark_logical_type(dtypes[c]) == "string"]
     out = prof.join(mh, "column_name", "left")
@@ -122,14 +125,20 @@ def build_sketch_store(
     """Materialize the sketch store: every (table, aug) sketched and
     appended to one Parquet dataset partitioned by table_name (pruning
     by table = partition pruning; by aug/column = row-group predicate
-    pushdown)."""
+    pushdown). Each write is eager, so the profiler's persisted frames
+    are released right after it."""
     first = True
     for name, df in tables.items():
         for aug in range(num_augs):
-            rows = build_sketch_rows(df, name, aug, num_perm)
-            rows.write.mode("overwrite" if first else "append").partitionBy(
-                "table_name"
-            ).parquet(out_path)
+            caches: list = []
+            rows = build_sketch_rows(df, name, aug, num_perm, caches=caches)
+            try:
+                rows.write.mode("overwrite" if first else "append").partitionBy(
+                    "table_name"
+                ).parquet(out_path)
+            finally:
+                for c in caches:
+                    c.unpersist()
             first = False
 
 

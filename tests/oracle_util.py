@@ -56,6 +56,13 @@ def built_query(spark, sf_dir: str, name: str):
     return _BUILT_QUERIES[key]
 
 
+def materialized_rdd_ids(spark) -> set:
+    """Ids of the session's RDDs that hold cached blocks right now —
+    tests diff two snapshots to prove an operation leaves no cache."""
+    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    return {i.id() for i in infos if i.numCachedPartitions() > 0}
+
+
 def run_oracle(sql: str, sf_dir: str) -> pd.DataFrame:
     con = _CONS.get(sf_dir)
     if con is None:

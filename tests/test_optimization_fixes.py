@@ -8,6 +8,8 @@ import os
 
 from pyspark.sql import functions as F
 
+from tests.oracle_util import materialized_rdd_ids
+
 
 def test_sql_str_lit_roundtrips_metacharacter_names(spark):
     from tabsketchfm_spark.functions.sqltext import sql_ident, sql_str_lit
@@ -72,9 +74,26 @@ def test_load_table_memo_misses_after_rewrite(spark, tmp_path):
     assert df2.count() == 3 and "extra" in df2.columns
 
 
-def _materialized_rdd_ids(spark) -> set:
-    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-    return {i.id() for i in infos if i.numCachedPartitions() > 0}
+def test_load_table_memo_evicts_other_sessions(spark, tmp_path):
+    """Inserting into the load_table plan memo drops every entry of
+    another application id — a stopped session's plans are never served
+    again and must not live for the rest of the process."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tabsketchfm_spark.sources import tables
+
+    sf_dir = str(tmp_path)
+    pq.write_table(pa.table({"r_regionkey": [1, 2]}), os.path.join(sf_dir, "region.parquet"))
+    stale = ("local-dead-app", "/nowhere/region.parquet", "region", 0, 0)
+    tables._TABLE_PLAN_CACHE[stale] = object()
+    try:
+        tables.load_table(spark, sf_dir, "region")
+        assert stale not in tables._TABLE_PLAN_CACHE
+        app = spark.sparkContext.applicationId
+        assert all(k[0] == app for k in tables._TABLE_PLAN_CACHE)
+    finally:
+        tables._TABLE_PLAN_CACHE.pop(stale, None)
 
 
 def test_pagerank_build_releases_signature_cache(spark, sf01):
@@ -91,9 +110,9 @@ def test_pagerank_build_releases_signature_cache(spark, sf01):
     structural.py so the probe cannot race the async cleanup."""
     from tabsketchfm_spark.plans import registry
 
-    before = _materialized_rdd_ids(spark)
+    before = materialized_rdd_ids(spark)
     registry.queries()["k3g_table_pagerank"](spark, sf01)
-    leaked = _materialized_rdd_ids(spark) - before
+    leaked = materialized_rdd_ids(spark) - before
     assert not leaked, f"materialized cache leaked at build: rdd ids {leaked}"
 
 
@@ -148,3 +167,60 @@ def test_no_window_row_emits_toplevel_array_columns(spark, sf001):
         if arr:
             bad[name] = arr
     assert not bad, f"window rows with array/map columns: {bad}"
+
+
+def test_default_driver_memory_sizes_from_physical_ram():
+    """Without $SPARK_GRAFT_DRIVER_MEM the driver heap is half of
+    physical memory, capped at 16g and floored at 512m, so the default
+    fits the host it runs on."""
+    from tabsketchfm_spark.session import default_driver_memory
+
+    gib = 1024**3
+    assert default_driver_memory(64 * gib) == "16g"
+    assert default_driver_memory(32 * gib) == "16g"
+    assert default_driver_memory(16 * gib) == "8g"
+    assert default_driver_memory(15 * gib) == "7680m"
+    assert default_driver_memory(256 * 1024**2) == "512m"
+    # the host running the test: within the floor and the cap
+    here = default_driver_memory()
+    mb = int(here[:-1]) * (1024 if here.endswith("g") else 1)
+    assert 512 <= mb <= 16 * 1024
+
+
+def test_ensure_package_on_workers_ships_once_under_threads(spark, tmp_path, monkeypatch):
+    """Concurrent query builds on one session must ship the package zip
+    ONCE: two threads passing the shipped check together rewrote the
+    same zip and added it twice, and a task fetching the first copy
+    failed ("exists and does not match contents")."""
+    import sys
+    import tempfile
+    import threading
+
+    from tabsketchfm_spark.session import ensure_package_on_workers
+
+    sc = spark.sparkContext
+    shipped = sc.environment.pop("_tabsketchfm_pkg_shipped", None)
+    added = []
+    monkeypatch.setattr(sc, "addPyFile", added.append)
+    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
+    start = threading.Barrier(16)
+
+    def ship():
+        start.wait(timeout=30)
+        ensure_package_on_workers(spark)
+
+    old_switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=ship) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(old_switch)
+        sc.environment.pop("_tabsketchfm_pkg_shipped", None)
+        if shipped is not None:
+            sc.environment["_tabsketchfm_pkg_shipped"] = shipped
+    assert len(added) == 1, f"package shipped {len(added)} times"

@@ -13,6 +13,8 @@ from tabsketchfm_spark.sources.sketch_store import (
 )
 from tabsketchfm_spark.sources.tables import load_table
 
+from tests.oracle_util import materialized_rdd_ids
+
 
 def test_aug_order_deterministic_and_identity():
     cols = ["a", "b", "c", "d"]
@@ -58,6 +60,21 @@ def test_store_roundtrip(spark, sf001, tmp_path):
     # store is the index: partition pruning on table_name
     plan = store.where("table_name = 'region'")._jdf.queryExecution().executedPlan().toString()
     assert "region" in plan
+
+
+def test_store_build_releases_profile_caches(spark, sf001, tmp_path):
+    """build_sketch_store writes each (table, aug) eagerly, so the
+    frames profile_table persists for it must be released after the
+    write — indexing a lake must leave no NEW materialized blocks.
+    Delta-based, as other tests in a shared session leave their own."""
+    tables = {
+        name: load_table(spark, sf001, name)
+        for name in ("region", "nation", "customer")
+    }
+    before = materialized_rdd_ids(spark)
+    build_sketch_store(spark, tables, str(tmp_path / "store3"), num_augs=2)
+    leaked = materialized_rdd_ids(spark) - before
+    assert not leaked, f"materialized cache leaked by the build: rdd ids {leaked}"
 
 
 def test_search_from_stored_sketches(spark, sf001, tmp_path):
