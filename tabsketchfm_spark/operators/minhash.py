@@ -175,14 +175,15 @@ def oph_signatures_oracle_sql(
     return "\nUNION ALL\n".join(parts)
 
 
-def oph_pair_scores(
-    query_sigs: DataFrame, candidate_sigs: DataFrame, num_buckets: int = NUM_PERM
+def _oph_pair_scores(
+    query_sigs: DataFrame, candidate_sigs: DataFrame, num_buckets: int
 ) -> DataFrame:
     """Score every (query column, candidate column) pair of two OPH
-    signature frames in ONE pass. Output: (q_col, nq, cand_table,
-    cand_col, nc, ncommon, matches) — occupied buckets of the query
-    column (nq) and of the candidate (nc), buckets both occupy
-    (ncommon) and buckets whose sigs agree (matches).
+    signature frames built with ``num_buckets`` buckets, in ONE pass.
+    Output: (q_col, nq, cand_table, cand_col, nc, ncommon, matches) —
+    occupied buckets of the query column (nq) and of the candidate
+    (nc), buckets both occupy (ncommon) and buckets whose sigs agree
+    (matches).
 
     The query sketch (≤ num_buckets rows per query column) is densified
     to exactly one (q_col, nq, bucket, qsig) row per bucket — qsig NULL
@@ -192,7 +193,9 @@ def oph_pair_scores(
     groupBy yields all three candidate-side counts — the candidate
     sketch is read once, so nothing needs persisting. Every pair whose
     two columns both have a sketch gets a row, shared buckets or not; a
-    column with no non-NULL value has no sketch and so no row."""
+    column with no non-NULL value has no sketch and so no row. The
+    union and subset searches build both sketches in the same call, so
+    the bucket range always matches."""
     q = (
         query_sigs.groupBy(F.col("column_name").alias("q_col"))
         .agg(
@@ -217,18 +220,25 @@ def oph_pair_scores(
             F.col("table_name").alias("cand_table"),
             F.col("column_name").alias("cand_col"),
         )
-        .agg(
-            F.count(F.lit(1)).alias("nc"),
-            F.count("qsig").alias("ncommon"),
-            F.count(F.when(F.col("sig") == F.col("qsig"), 1)).alias("matches"),
-        )
+        .agg(*_candidate_counts())
     )
 
 
+def _candidate_counts() -> list[Column]:
+    """nc, ncommon and matches of candidate sketch rows joined to the
+    query's (bucket, qsig) — qsig NULL where the query missed the
+    bucket."""
+    return [
+        F.count(F.lit(1)).alias("nc"),
+        F.count("qsig").alias("ncommon"),
+        F.count(F.when(F.col("sig") == F.col("qsig"), 1)).alias("matches"),
+    ]
+
+
 def _oph_jaccard() -> Column:
-    """Empty-bucket-aware Jaccard estimate of an ``oph_pair_scores`` row:
-    agreeing buckets over buckets occupied by EITHER side (identical
-    sets score exactly 1.0 regardless of fill rate)."""
+    """Empty-bucket-aware Jaccard estimate of a scored pair: agreeing
+    buckets over buckets occupied by EITHER side (identical sets score
+    exactly 1.0 regardless of fill rate)."""
     return F.col("matches") / (
         F.col("nc") + F.col("nq") - F.col("ncommon")
     ).cast("double")
@@ -238,14 +248,34 @@ def _join_order() -> list[Column]:
     return [F.desc("est_jaccard"), F.asc("cand_table"), F.asc("cand_column")]
 
 
-def _oph_join_estimates(
-    query_sigs: DataFrame, candidate_sigs: DataFrame, num_buckets: int
-) -> DataFrame:
-    """(cand_table, cand_column, est_jaccard) for ONE query column."""
-    return oph_pair_scores(query_sigs, candidate_sigs, num_buckets).select(
-        "cand_table",
-        F.col("cand_col").alias("cand_column"),
-        _oph_jaccard().alias("est_jaccard"),
+def _oph_join_estimates(query_sigs: DataFrame, candidate_sigs: DataFrame) -> DataFrame:
+    """(cand_table, cand_column, est_jaccard) of ONE query column's
+    sketch against every candidate column, in one pass.
+
+    ONE global aggregate turns the query sketch into (nq, bucket, qsig)
+    rows; the candidate sketch LEFT-joins them on bucket (broadcast;
+    every candidate row meets at most one query row), and one groupBy
+    yields nc, ncommon and matches. Nothing depends on the bucket count
+    the sketches were built with, and a query column with no value (no
+    sketch rows) scores every candidate 0. nq reaches a candidate only
+    through rows that met a query bucket; a candidate that met none has
+    matches = 0, so its estimate is 0 whatever nq is. A query frame
+    holding more than one column fails when it runs."""
+    one_column = F.size(F.collect_set("column_name")) <= 1
+    q = query_sigs.agg(
+        F.when(one_column, F.count(F.lit(1)))
+        .otherwise(F.raise_error(F.lit("OPH join estimate scores one query column")))
+        .alias("nq"),
+        F.collect_list(F.struct("bucket", F.col("sig").alias("qsig"))).alias("qs"),
+    ).select("nq", F.inline("qs"))
+    return (
+        candidate_sigs.join(F.broadcast(q), "bucket", "left")
+        .groupBy(
+            F.col("table_name").alias("cand_table"),
+            F.col("column_name").alias("cand_column"),
+        )
+        .agg(F.coalesce(F.max("nq"), F.lit(0)).alias("nq"), *_candidate_counts())
+        .select("cand_table", "cand_column", _oph_jaccard().alias("est_jaccard"))
     )
 
 
@@ -254,14 +284,16 @@ def oph_jaccard_estimate(
 ) -> DataFrame:
     """Jaccard estimate from OPH signatures of ONE query column against
     an arbitrary candidate frame, every candidate ranked (estimate desc,
-    then name). Same ranking contract as minhash_jaccard_estimate. The
-    candidate frame is unbounded here, so the rank is ``global_rank``;
-    ``joinability_search_oph`` bounds it by the columns it names."""
+    then name). Same ranking contract as minhash_jaccard_estimate.
+    ``query_sigs`` must hold one column's sketch; a frame holding
+    several fails when it runs. ``num_buckets`` is accepted for
+    symmetry with the sketch builders; the buckets are read from the
+    sketches. The candidate frame is unbounded here, so the rank is
+    ``global_rank``; ``joinability_search_oph`` bounds it by the
+    columns it names."""
     from tabsketchfm_spark.functions.ranking import global_rank
 
-    return global_rank(
-        _oph_join_estimates(query_sigs, candidate_sigs, num_buckets), _join_order()
-    )
+    return global_rank(_oph_join_estimates(query_sigs, candidate_sigs), _join_order())
 
 
 def minhash_jaccard_estimate(
@@ -331,7 +363,7 @@ def joinability_search_oph(
         num_buckets,
     )
     return ranked_topk(
-        _oph_join_estimates(qsigs, cand_sigs, num_buckets),
+        _oph_join_estimates(qsigs, cand_sigs),
         _join_order(),
         sum(len(cols) for _, cols in candidates),
     )
@@ -540,7 +572,7 @@ def unionability_search(
         [(load_table(spark, sf_dir, t), t, cols) for t, cols in candidates.items()],
         num_buckets,
     )
-    est = oph_pair_scores(qsigs, csigs, num_buckets).select(
+    est = _oph_pair_scores(qsigs, csigs, num_buckets).select(
         "q_col", "cand_table", "cand_col", _oph_jaccard().alias("est")
     )
     wk = Window.partitionBy("q_col").orderBy(
@@ -653,7 +685,7 @@ def subset_search(
         num_buckets,
     )
     cont = (
-        oph_pair_scores(qsigs, csigs, num_buckets)
+        _oph_pair_scores(qsigs, csigs, num_buckets)
         .where(F.col("ncommon") > 0)
         .select(
             "q_col",

@@ -47,6 +47,45 @@ def test_oph_estimate_tracks_exact(spark, sf001, left, right):
     assert abs(est - exact) <= 0.2, (exact, est)
 
 
+def _oph_estimate_by_hand(qs, cs) -> dict:
+    """The empty-bucket-aware estimate from collected sketches: agreeing
+    buckets over buckets occupied by either side."""
+    q = {r.bucket: r.sig for r in qs.collect()}
+    cands = {}
+    for r in cs.collect():
+        cands.setdefault((r.table_name, r.column_name), {})[r.bucket] = r.sig
+    return {
+        key: sum(q[b] == c[b] for b in q.keys() & c.keys()) / len(q.keys() | c.keys())
+        for key, c in cands.items()
+    }
+
+
+@pytest.mark.parametrize("num_buckets", [37, 256])
+def test_oph_estimate_reads_bucket_range_from_sketches(spark, sf001, num_buckets):
+    """Sketches built with a non-default bucket count score exactly the
+    hand-computed estimate whether or not the count is passed — the
+    scorer takes the buckets from the sketches, not from the argument."""
+    (lt, lc), (rt, rc) = PAIRS[0]
+    qs = oph_signatures(load_table(spark, sf001, lt), lt, [lc], num_buckets)
+    cs = oph_signatures(load_table(spark, sf001, rt), rt, [rc, "c_nationkey"], num_buckets)
+    want = _oph_estimate_by_hand(qs, cs)
+    for est in [oph_jaccard_estimate(qs, cs), oph_jaccard_estimate(qs, cs, num_buckets)]:
+        got = {(r.cand_table, r.cand_column): r.est_jaccard for r in est.collect()}
+        assert got.keys() == want.keys()
+        for key, value in want.items():
+            assert got[key] == pytest.approx(value, rel=1e-12), (key, got[key], value)
+
+
+def test_oph_estimate_rejects_several_query_columns(spark, sf001):
+    """The estimate scores ONE query column; a query frame holding two
+    fails when it runs instead of pooling them into a wrong score."""
+    df = load_table(spark, sf001, "customer")
+    qs = oph_signatures(df, "customer", ["c_custkey", "c_nationkey"])
+    cs = oph_signatures(load_table(spark, sf001, "orders"), "orders", ["o_custkey"])
+    with pytest.raises(Exception, match="one query column"):
+        oph_jaccard_estimate(qs, cs).collect()
+
+
 def test_minhash_deterministic(spark, sf001):
     df = load_table(spark, sf001, "customer")
     s1 = {(r.perm, r.sig) for r in minhash_signatures(df, "c", ["c_custkey"]).collect()}

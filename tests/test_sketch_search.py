@@ -1,8 +1,10 @@
 """Sketch search operators (join / union / subset) against their DuckDB
 twins on a small hand-built lake whose shapes the registry rows do not
 cover: identical candidate columns (a tie broken by name), an all-NULL
-candidate column (no sketch, no row), a candidate column listed twice
-and a query column that overlaps nothing."""
+candidate column (no sketch, no row), a candidate column listed twice,
+a query column that overlaps nothing and a query column with no value
+at all (no sketch: every join candidate scores 0, union and subset see
+no such query column)."""
 
 from __future__ import annotations
 
@@ -17,12 +19,14 @@ from tests.oracle_util import assert_match, materialized_rdd_ids
 _N = 60
 
 # q.k overlaps a.k / a.x / b.k; a.x is a copy of a.k and b.k of a.k
-# (ties); a.empty is all NULL; q.nov shares no value with any column
+# (ties); a.empty is all NULL; q.nov shares no value with any column;
+# q.blank holds only NULL and '' (both dropped before sketching)
 _LAKE = {
     "q": {
         "k": pa.array(list(range(1, _N + 1)), pa.int64()),
         "name": pa.array([f"n{i}" for i in range(_N)]),
         "nov": pa.array([f"zz{i}" for i in range(_N)]),
+        "blank": pa.array([None if i % 2 else "" for i in range(_N)], pa.string()),
     },
     "a": {
         "k": pa.array(list(range(20, 20 + _N)), pa.int64()),
@@ -60,13 +64,25 @@ _CASES = {
         lambda spark, d: minhash.joinability_search_oph(spark, d, ("q", "nov"), _JOIN_CANDS),
         minhash.joinability_oph_oracle_sql(("q", "nov"), _JOIN_CANDS),
     ),
+    "join_empty_query": (
+        lambda spark, d: minhash.joinability_search_oph(spark, d, ("q", "blank"), _JOIN_CANDS),
+        minhash.joinability_oph_oracle_sql(("q", "blank"), _JOIN_CANDS),
+    ),
     "union": (
         lambda spark, d: minhash.unionability_search(spark, d, "q", ["k", "name", "nov"], _CANDS),
         minhash.unionability_oracle_sql("q", ["k", "name", "nov"], _CANDS),
     ),
+    "union_empty_query": (
+        lambda spark, d: minhash.unionability_search(spark, d, "q", ["k", "blank"], _CANDS),
+        minhash.unionability_oracle_sql("q", ["k", "blank"], _CANDS),
+    ),
     "subset": (
         lambda spark, d: minhash.subset_search(spark, d, "q", ["k", "nov"], _CANDS),
         minhash.subset_search_oracle_sql("q", ["k", "nov"], _CANDS),
+    ),
+    "subset_empty_query": (
+        lambda spark, d: minhash.subset_search(spark, d, "q", ["k", "blank"], _CANDS),
+        minhash.subset_search_oracle_sql("q", ["k", "blank"], _CANDS),
     ),
 }
 
@@ -88,7 +104,8 @@ def test_join_search_edge_shapes(spark, lake):
     """The shapes the twin comparison relies on, spelled out: the
     listed-twice column yields ONE row, the all-NULL column none, the
     identical columns tie and rank by (table, column) name, and a query
-    column that overlaps nothing scores 0 everywhere."""
+    column that overlaps nothing — or has no value at all — scores 0
+    everywhere."""
     sf_dir, _ = lake
     def ranked(query):
         df = minhash.joinability_search_oph(spark, sf_dir, query, _JOIN_CANDS)
@@ -102,6 +119,7 @@ def test_join_search_edge_shapes(spark, lake):
     assert len({r.est_jaccard for r in top}) == 1 and top[0].est_jaccard > 0
     assert [r.rank for r in rows] == [1, 2, 3, 4, 5]
 
-    none = ranked(("q", "nov"))
-    assert {r.est_jaccard for r in none} == {0.0}
-    assert [(r.cand_table, r.cand_column) for r in none] == sorted(keys)
+    for query in [("q", "nov"), ("q", "blank")]:
+        none = ranked(query)
+        assert {r.est_jaccard for r in none} == {0.0}, query
+        assert [(r.cand_table, r.cand_column) for r in none] == sorted(keys), query
